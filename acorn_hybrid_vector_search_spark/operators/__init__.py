@@ -33,10 +33,9 @@ from acorn_hybrid_vector_search_spark.operators.hybrid import (
     postfilter_search,
     prefilter_search,
 )
-from acorn_hybrid_vector_search_spark.operators.knn import knn_batch, knn_exact
+from acorn_hybrid_vector_search_spark.operators.knn import knn_exact
 from acorn_hybrid_vector_search_spark.operators.similarity import (
     knn_batch_blas,
-    knn_exact_blas,
     lsh_near_dup_pairs,
     with_lsh_bucket,
 )
@@ -70,10 +69,8 @@ __all__ = [
     "materialize_attribute_subset",
     "postfilter_search",
     "prefilter_search",
-    "knn_batch",
     "knn_batch_blas",
     "knn_exact",
-    "knn_exact_blas",
     "lsh_near_dup_pairs",
     "with_lsh_bucket",
 ]

@@ -1,155 +1,157 @@
-"""Session-scoped pinned materialization for relations consumed by
-multiple plan subtrees (self-join sides, count-then-probe patterns).
+"""Session-scoped caches: built artifacts, pinned relations, probe memos.
 
-Spark's exchange reuse does not fire across two consumers of the same
-subtree when the consuming joins carry extra conjuncts or sit in
-different stages, so an expensive shared relation (signature table,
-tokenized corpus) would be computed once PER CONSUMER. Persisting and
-eagerly materializing it restores compute-once; at production scale the
-same relation is what a pipeline writes to an intermediate table, and
-persist is the in-session equivalent (MEMORY_AND_DISK — these relations
-are row-scaled).
+One contract covers every kind of entry here.
 
-A small LRU bounds the pinned set: repeated operator calls (bench loops,
-notebooks) would otherwise accumulate cache entries without limit and
-degrade the whole session. Evicting an entry a caller still holds only
-costs recompute on next use — never correctness.
-
-Entries are DEDUPED BY PLAN SEMANTICS (r7): a repeated operator call
-builds a fresh DataFrame with an identical logical plan, and the old
-behavior appended the twin and then LRU-evicted (unpersisted) the
-original — self-eviction that turned every repeat call into a full
-recompute + re-pin (the documented bench churn). ``semanticHash`` +
-``sameSemantics`` lookup returns the already-pinned frame instead,
-which is the materialize-once contract a real pipeline has: the
-intermediate table is written once, not once per downstream query.
+- ``artifact(spark, name, key, build)`` returns ``build(workdir)``,
+  memoized per (session applicationId, name, key). ``workdir`` is a
+  fresh path under the session's root directory that nothing else
+  uses; a build that writes files writes them there (Spark's writers
+  create it), a build that writes nothing ignores it. Query vectors,
+  prepared plans, persisted stores and loaded index handles are all
+  artifacts. ``read_parquet`` is the artifact ``spark.read.parquet``:
+  the read runs a footer/schema job at call time, and the same
+  DataFrame back keeps the semantic lookups below cheap.
+- ``materialize(df)`` persists and eagerly counts a relation consumed
+  by several plan subtrees (Spark's exchange reuse misses consumers
+  in different stages). ``probe_memo(df, extra_key, compute)``
+  memoizes a bounded scalar probe. Both look entries up by plan
+  semantics (``semanticHash`` + ``sameSemantics``), because repeated
+  operator calls build fresh DataFrames with identical plans, and both
+  are small LRUs: dropping an entry a caller still holds only costs a
+  recompute.
+- Every entry belongs to the session that made it. The first call
+  from another session evicts them all: pins are unpersisted, entries
+  dropped, and the dead session's root directory is deleted.
+- ``invalidate()`` forgets every entry and unpersists every pin. Store
+  writers call it, because two reads of a rewritten parquet root are
+  semantically equal. It never deletes a directory: a build that is
+  still running may hold a workdir it got earlier. Session roots are
+  deleted on dead-session eviction or at interpreter exit.
 """
 
 from __future__ import annotations
 
+import atexit
+import itertools
+import os
+import shutil
+import tempfile
+import threading
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
-__all__ = ["invalidate", "materialize", "probe_memo", "read_parquet"]
+__all__ = ["artifact", "invalidate", "materialize", "probe_memo", "read_parquet"]
 
-# insertion-ordered: index 0 is the LRU victim; entries carry the owning
-# SparkContext's applicationId so a session restart can't serve a frame
-# bound to the dead session (r8 ADVICE: the prepared-query cache got this
-# hardening in r7; the materialize LRU matched the bug class but not the fix)
-_PINNED: list[tuple[str | None, int, DataFrame]] = []
-# r14: 8 → 16 — the pin population grew (items_etl's correlated relation
-# joined the dedup signature/cap tables), and at 8 a full battery pass
-# LRU-evicted pins that later repeats of the same queries re-computed.
-# Entries are MEMORY_AND_DISK and row-scaled; eviction still only costs
-# recompute, never correctness.
+# streaming foreachBatch writers call invalidate() from py4j callback
+# threads, so every structural change to the registries holds _LOCK
+# (never across a build, which may itself call invalidate())
+_LOCK = threading.Lock()
+_ARTIFACTS: dict[tuple[str | None, str, object], object] = {}
+_ROOTS: dict[str | None, str] = {}
+_WORKDIR_SEQ = itertools.count()
+
+# insertion-ordered: index 0 is the LRU victim
+_PINNED: list[tuple[str | None, int | None, DataFrame]] = []
 _PINNED_MAX = 16
-
-
-def _app_id(df: DataFrame) -> str | None:
-    try:
-        return df.sparkSession.sparkContext.applicationId
-    except Exception:
-        return None
-
-
-# memoized bounded probe results (e.g. _cap_binds' 1-row max-bucket
-# scalar): repeated operator calls rebuild semantically identical plans,
-# and re-running the probe job per call would tax every binding capped
-# query with a fixed job overhead. Same staleness contract as _PINNED:
-# store writers invalidate(), dead-session entries are evicted on use.
 _PROBE: list[tuple[str | None, int, object, DataFrame, object]] = []
 _PROBE_MAX = 64
 
 
-def probe_memo(df: DataFrame, extra_key, compute):
-    """Return ``compute()`` memoized per (session, plan semantics,
-    extra_key). The value must be a pure function of the plan's data —
-    invalidate() (called by every store writer) clears the memo, so a
-    rewritten store re-probes."""
-    app = _app_id(df)
+def _app_id(spark) -> str | None:
     try:
-        h = df.semanticHash()
+        return spark.sparkContext.applicationId
     except Exception:
-        return compute()
-    for i in [i for i, e in enumerate(_PROBE) if e[0] != app][::-1]:
-        _PROBE.pop(i)
-    for i, (pa, ph, pk, pdf, val) in enumerate(_PROBE):
-        if ph == h and pk == extra_key and df.sameSemantics(pdf):
-            _PROBE.append(_PROBE.pop(i))  # LRU refresh
-            return val
-    val = compute()
-    _PROBE.append((app, h, extra_key, df, val))
-    while len(_PROBE) > _PROBE_MAX:
-        _PROBE.pop(0)
-    return val
+        return None
 
 
-# memoized store READS: spark.read.parquet(path) runs a footer/schema
-# job at call time, so an operator that re-reads a session-static store
-# per invocation (bench loops, notebooks) pays one fixed job per call
-# for a DataFrame whose plan is identical every time (r14 profile: 1-2
-# such jobs per warm build of every *_probe/_capped query). Returning
-# the SAME DataFrame also keeps the semantic-dedup lookups above
-# trivially cheap. Staleness contract as _PINNED: store writers
-# invalidate() (a rewritten path re-reads — the cached plan's file
-# listing would otherwise point at deleted files), dead-session entries
-# evicted on use.
-_READS: list[tuple[str | None, str, DataFrame]] = []
-_READS_MAX = 32
-
-# external plan caches that must share the staleness contract: a store
-# rewrite invalidates not just memoized reads but any PREPARED plan that
-# may embed a store's file listing (r15, ADVICE r14: _PREPARED_WIDE
-# includes store-probing queries, so a mid-session rewrite would leave a
-# prepared DataFrame holding the pre-rewrite listing — the same stale-pin
-# class the r7 fix covered for dead sessions). Registrants supply a
-# zero-arg clearer (e.g. dict.clear).
-_EXTERNAL_CLEARERS: list = []
+def _unpersist(frames) -> None:
+    for df in frames:
+        try:
+            df.unpersist()
+        except Exception:  # owning session already stopped — nothing to free
+            pass
 
 
-def register_clearer(fn) -> None:
-    """Register a zero-arg callable to be invoked by ``invalidate()``."""
-    if fn not in _EXTERNAL_CLEARERS:
-        _EXTERNAL_CLEARERS.append(fn)
+def _evict_dead(app: str | None) -> None:
+    """Drop every entry owned by a session other than ``app``, and
+    delete those sessions' root directories."""
+    with _LOCK:
+        for k in [k for k in _ARTIFACTS if k[0] != app]:
+            del _ARTIFACTS[k]
+        dead_pins = [e[2] for e in _PINNED if e[0] != app]
+        _PINNED[:] = [e for e in _PINNED if e[0] == app]
+        _PROBE[:] = [e for e in _PROBE if e[0] == app]
+        dead_roots = [_ROOTS.pop(a) for a in [a for a in _ROOTS if a != app]]
+    _unpersist(dead_pins)
+    for root in dead_roots:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _remove_roots() -> None:
+    with _LOCK:
+        roots = list(_ROOTS.values())
+        _ROOTS.clear()
+    for root in roots:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+atexit.register(_remove_roots)
+
+
+def artifact(spark, name: str, key, build):
+    """Return ``build(workdir)`` memoized per (session, ``name``, ``key``)."""
+    app = _app_id(spark)
+    _evict_dead(app)
+    k = (app, name, key)
+    with _LOCK:
+        if k in _ARTIFACTS:
+            return _ARTIFACTS[k]
+        root = _ROOTS.get(app)
+        if root is None:
+            root = _ROOTS[app] = tempfile.mkdtemp(prefix="acorn_session_")
+        workdir = os.path.join(root, f"{name}_{next(_WORKDIR_SEQ)}")
+    value = build(workdir)
+    with _LOCK:
+        _ARTIFACTS[k] = value
+    return value
 
 
 def read_parquet(spark, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` memoized per (session, path)."""
-    try:
-        app = spark.sparkContext.applicationId
-    except Exception:
-        app = None
-    for i in [i for i, e in enumerate(_READS) if e[0] != app][::-1]:
-        _READS.pop(i)
-    for i, (ra, rp, rdf) in enumerate(_READS):
-        if rp == path:
-            _READS.append(_READS.pop(i))  # LRU refresh
-            return rdf
-    df = spark.read.parquet(path)
-    _READS.append((app, path, df))
-    while len(_READS) > _READS_MAX:
-        _READS.pop(0)
-    return df
+    return artifact(spark, "read_parquet", path, lambda _: spark.read.parquet(path))
 
 
 def invalidate() -> None:
-    """Unpersist every pinned relation. Store WRITERS (minhash_write,
-    winnow_write, nsw_write/append/compact, …) call this: semantic
-    dedup compares canonicalized plans, and two reads of the same
-    parquet root are semantically equal EVEN AFTER the files were
-    rewritten — without invalidation a probe after an in-session store
-    rewrite would be silently served the pre-rewrite snapshot (the
-    /code-review r7 stale-pin finding; pinned by
-    test_materialize_invalidated_on_store_rewrite)."""
-    _PROBE.clear()
-    _READS.clear()
-    for fn in _EXTERNAL_CLEARERS:
-        fn()
-    while _PINNED:
-        try:
-            _PINNED.pop()[2].unpersist()
-        except Exception:  # owning session already stopped — nothing to free
-            pass
+    """Forget every artifact, probe memo and read, and unpersist every
+    pinned relation. Directories stay until their session is evicted."""
+    with _LOCK:
+        _ARTIFACTS.clear()
+        _PROBE.clear()
+        pins = [e[2] for e in _PINNED]
+        _PINNED.clear()
+    _unpersist(pins)
+
+
+def probe_memo(df: DataFrame, extra_key, compute):
+    """Return ``compute()`` memoized per (session, plan semantics,
+    extra_key). The value must be a pure function of the plan's data."""
+    app = _app_id(df.sparkSession)
+    _evict_dead(app)
+    try:
+        h = df.semanticHash()
+    except Exception:
+        return compute()
+    with _LOCK:
+        for i, (pa, ph, pk, pdf, val) in enumerate(_PROBE):
+            if ph == h and pk == extra_key and df.sameSemantics(pdf):
+                _PROBE.append(_PROBE.pop(i))  # LRU refresh
+                return val
+    val = compute()
+    with _LOCK:
+        _PROBE.append((app, h, extra_key, df, val))
+        del _PROBE[:-_PROBE_MAX]
+    return val
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -158,27 +160,23 @@ def materialize(df: DataFrame) -> DataFrame:
     anyway). Returns the persisted frame — the ALREADY-PINNED one when
     a semantically identical plan is pinned (LRU-refreshed, no
     recompute)."""
-    app = _app_id(df)
-    # evict pins owned by a different (stopped or sibling-context) session:
-    # serving them would fail at action time, and holding them pins memory
-    # the dead session can never release (test_materialize_evicts_dead_sessions)
-    for i in [i for i, (pa, _, _) in enumerate(_PINNED) if pa != app][::-1]:
-        try:
-            _PINNED.pop(i)[2].unpersist()
-        except Exception:
-            pass
+    app = _app_id(df.sparkSession)
+    _evict_dead(app)
     try:
         h = df.semanticHash()
     except Exception:  # plan not hashable (e.g. unresolved) — pin fresh
         h = None
     if h is not None:
-        for i, (pa, ph, pdf) in enumerate(_PINNED):
-            if ph == h and df.sameSemantics(pdf):
-                _PINNED.append(_PINNED.pop(i))  # LRU refresh
-                return pdf
+        with _LOCK:
+            for i, (pa, ph, pdf) in enumerate(_PINNED):
+                if ph == h and df.sameSemantics(pdf):
+                    _PINNED.append(_PINNED.pop(i))  # LRU refresh
+                    return pdf
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     df.count()
-    _PINNED.append((app, h, df))
-    while len(_PINNED) > _PINNED_MAX:
-        _PINNED.pop(0)[2].unpersist()
+    with _LOCK:
+        _PINNED.append((app, h, df))
+        victims = [e[2] for e in _PINNED[:-_PINNED_MAX]]
+        del _PINNED[:-_PINNED_MAX]
+    _unpersist(victims)
     return df

@@ -19,7 +19,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from acorn_hybrid_vector_search_spark.functions.distance import l2_sq_distance
 
@@ -48,43 +47,4 @@ def knn_exact(
         df.withColumn(dist_col, d)
         .orderBy(F.col(dist_col).asc(), F.col(id_col).asc())
         .limit(k)
-    )
-
-
-def knn_batch(
-    df: DataFrame,
-    queries: DataFrame,
-    k: int,
-    *,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dist_col: str = "dist",
-) -> DataFrame:
-    """Batch multi-query exact top-k: ONE scan answers every query.
-
-    The reference's ``knn_query`` takes a whole batch of query vectors and
-    fans them out over C++ threads (hnswlib/python_bindings/bindings.cpp:
-    627-646 ParallelFor); the Spark shape is a broadcast of the bounded
-    query table across the collection (BroadcastNestedLoopJoin — the big
-    side never shuffles for the join), a distance per (row, query), then
-    ``row_number() ≤ k`` per query. Returns ``df``'s columns plus
-    (query_id, dist), tie-broken (dist, id).
-
-    The per-query window shuffles N·|Q| pair rows — fine for modest query
-    batches; for large |Q| or very large N use ``knn_batch_blas``
-    (operators/similarity.py), which reduces to |partitions|·|Q|·k rows
-    map-side before any shuffle.
-    """
-    pairs = df.crossJoin(F.broadcast(queries))
-    d = l2_sq_distance(F.col(vec_col), F.col(query_vec_col))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col(dist_col).asc(), F.col(id_col).asc()
-    )
-    return (
-        pairs.withColumn(dist_col, d)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn", query_vec_col)
     )

@@ -3,9 +3,9 @@ training — the retrieval-training data prep step.
 
 A hard negative for query q is an item CLOSE to q in embedding space but
 with a DIFFERENT label — the examples that actually move a contrastive
-loss. The Spark shape mirrors batch k-NN (operators/knn.py::knn_batch):
-broadcast the bounded query batch across the collection (the corpus
-never shuffles for the join), apply the label-mismatch conjunct to each
+loss. The Spark shape is batch k-NN over a broadcast join: broadcast
+the bounded query batch across the collection (the corpus never
+shuffles for the join), apply the label-mismatch conjunct to each
 pair BEFORE ranking, then ``row_number() ≤ k`` per query. The pair
 filter runs map-side, so the per-query rank shuffle carries only
 eligible pairs.

@@ -25,57 +25,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType
-
-from acorn_hybrid_vector_search_spark.operators.knn import knn_exact  # noqa: F401 (re-export)
-
-
-def l2_sq_distance_blas(vec_col, query_vec: Sequence[float]):
-    """Column: squared-L2 distance to a fixed query via NumPy batches."""
-    q = np.asarray(list(query_vec), dtype=np.float64)
-
-    @F.pandas_udf(DoubleType())
-    def dist(v: pd.Series) -> pd.Series:
-        x = np.asarray(list(v), dtype=np.float64)
-        d = x - q[None, :]
-        return pd.Series(np.einsum("ij,ij->i", d, d))
-
-    return dist(vec_col)
-
-
-def cosine_similarity_blas(vec_col, query_vec: Sequence[float]):
-    """Column: cosine similarity to a fixed query via NumPy batches.
-    Zero-norm rows yield NULL (matches functions.distance semantics)."""
-    q = np.asarray(list(query_vec), dtype=np.float64)
-    qn = float(np.sqrt((q**2).sum()))
-
-    @F.pandas_udf(DoubleType())
-    def sim(v: pd.Series) -> pd.Series:
-        x = np.asarray(list(v), dtype=np.float64)
-        norms = np.sqrt(np.einsum("ij,ij->i", x, x)) * qn
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = (x @ q) / norms
-        return pd.Series(np.where(norms == 0.0, np.nan, out))
-
-    return sim(vec_col)
-
-
-def knn_exact_blas(
-    df: DataFrame,
-    query_vec: Sequence[float],
-    k: int,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dist_col: str = "dist",
-) -> DataFrame:
-    """knn_exact with the BLAS distance kernel. Same TakeOrderedAndProject
-    plan shape — only the distance projection differs."""
-    return (
-        df.withColumn(dist_col, l2_sq_distance_blas(F.col(vec_col), query_vec))
-        .orderBy(F.col(dist_col).asc(), F.col(id_col).asc())
-        .limit(k)
-    )
+from pyspark.sql.types import LongType
 
 
 def knn_batch_blas(
@@ -100,7 +50,7 @@ def knn_batch_blas(
       total (accumulated across its batches, re-reduced at partition end)
       → global per-query row_number() ≤ k over the tiny candidate stream.
 
-    The shuffle moves O(P·|Q|·k) rows instead of ``knn_batch``'s N·|Q| —
+    The shuffle moves O(P·|Q|·k) rows instead of a per-query window's N·|Q| —
     the same partial-then-final aggregation shape Spark uses for map-side
     combine. Output: (query_id, id, dist); join payload back by id if
     needed (k·|Q| rows — a broadcast).

@@ -28,15 +28,22 @@ like-for-like comparison. Set ``SPARK_GRAFT_CACHE_INPUTS=0`` to time
 cold parquet scans instead (the number that predicts 100 TB, where
 inputs are never resident).
 
-r15 (VERDICT r14 item 1 — de-game the graded timing): every query ALSO
-reports ``first_exec_sec``, a single UNCACHED execution taken before
-the hot protocol: all session caches are reset (``_PREPARED`` prepared
-plans, ``_cache`` pins/read-memos/probe-memos, the hot base-table
-cache) and input caching is disabled for that one run, so the probe
-pays plan construction + a full computation from the parquet inputs —
-the number a first-time execution pays, with no cache serving any part
-of it. The caches are reset AGAIN after the probe so the hot runs
-rebuild over hot inputs rather than reusing the cold-built plan. The
+Every query ALSO reports ``first_exec_sec``, a single UNCACHED
+execution taken before the hot protocol. Before it, ``_cache.invalidate()``
+forgets every session artifact (prepared plans, query vectors,
+persisted stores and loaded index handles, router stats), every pin and
+every read/probe memo, and the hot base-table cache is cleared; input
+caching is disabled for that one run. The probe therefore pays plan
+construction, every store/index build its query needs, and a full
+computation from the parquet inputs. What survives the reset: files a
+build already wrote stay on disk under the session root (invalidate
+never deletes a directory), but nothing points at them any more — a
+rebuild writes a fresh copy; and three memos outside ``_cache`` — the
+listings JSON-schema inference memo (``sources/listings.py``), the
+temp-view registry (``sql.py``), and graph_ann's sidecar loads, which
+are keyed by store path and so miss on every rebuilt store. The caches
+are reset AGAIN after the probe so the hot runs rebuild over hot inputs
+rather than reusing the cold-built plan. The
 full per-query map rides in BENCH.json (``first_exec_sec``); stdout
 adds only the scalar ``value_first_exec`` (sum). The hot medians in
 ``queries`` keep their exact r2+ semantics — nothing existing is
@@ -147,10 +154,13 @@ from acorn_hybrid_vector_search_spark.sources import testdata  # noqa: E402
 
 def _reset_session_caches() -> None:
     """Reset every cross-call cache so the next execution computes from
-    the parquet inputs: prepared plans (wired into invalidate via
-    register_clearer), materialize pins, read/probe memos, and the hot
-    base-table cache."""
-    _cache.invalidate()  # also clears entrymod._PREPARED (registered clearer)
+    the parquet inputs. ``_cache.invalidate()`` forgets every session
+    artifact (prepared plans, query vectors, stores, index handles,
+    stats), unpersists every materialize pin and drops every read/probe
+    memo; ``clear_hot_cache`` unpersists the hot base tables. Store
+    files already written survive on disk, unreferenced, until the
+    session ends."""
+    _cache.invalidate()
     testdata.clear_hot_cache()
 
 
@@ -174,9 +184,9 @@ def main() -> None:
     first_exec: dict[str, float] = {}
     cache_env_prev = os.environ.get("SPARK_GRAFT_CACHE_INPUTS")
     for name, fn in qfns.items():
-        # UNCACHED first-execution probe (r15, VERDICT r14 item 1): all
-        # session caches reset, input caching off — this one run pays
-        # plan construction plus a full computation from parquet.
+        # UNCACHED first-execution probe: session caches reset, input
+        # caching off — this one run pays plan construction, its store
+        # builds and a full computation from parquet.
         _reset_session_caches()
         os.environ["SPARK_GRAFT_CACHE_INPUTS"] = "0"
         try:

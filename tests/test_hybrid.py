@@ -131,41 +131,21 @@ def test_materialized_subset_partition_pruning(embeddings_df, qvec, tmp_path):
 
 
 def test_knn_batch_matches_per_query_loop(embeddings_df):
-    """K1 batch form: one-scan multi-query top-k must equal running
-    knn_exact once per query (ids AND distances)."""
-    from acorn_hybrid_vector_search_spark.operators.knn import knn_batch
+    """K1 batch form: knn_batch_blas — the map-side-reduced kernel
+    behind the knn_batch_topk query — must equal running knn_exact once
+    per query (ids AND distances)."""
+    from acorn_hybrid_vector_search_spark.operators.similarity import knn_batch_blas
 
-    queries = embeddings_df.filter("vec_id < 3").select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    qrows = embeddings_df.filter("vec_id < 3").select("vec_id", "embedding").collect()
+    queries = [(r["vec_id"], r["embedding"]) for r in qrows]
     got: dict[int, list] = {}
-    for r in knn_batch(embeddings_df, queries, k=5).collect():
+    for r in knn_batch_blas(embeddings_df, queries, k=5).collect():
         got.setdefault(r["query_id"], []).append((r["dist"], r["vec_id"]))
     assert set(got) == {0, 1, 2}
     for qid in got:
         qv = embeddings_df.filter(f"vec_id = {qid}").select("embedding").head()[0]
         want = [(r["dist"], r["vec_id"]) for r in knn_exact(embeddings_df, qv, 5).collect()]
         assert sorted(got[qid]) == [(pytest.approx(d), i) for d, i in want]
-
-
-def test_knn_batch_blas_matches_jvm_path(embeddings_df):
-    """The map-side-reduced BLAS batch kernel returns the same neighbor
-    ids per query as the JVM expression path."""
-    from acorn_hybrid_vector_search_spark.operators.knn import knn_batch
-    from acorn_hybrid_vector_search_spark.operators.similarity import knn_batch_blas
-
-    qrows = embeddings_df.filter("vec_id < 3").select("vec_id", "embedding").collect()
-    queries_list = [(r["vec_id"], r["embedding"]) for r in qrows]
-    queries_df = embeddings_df.filter("vec_id < 3").select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    blas = {
-        (r["query_id"], r["vec_id"]) for r in knn_batch_blas(embeddings_df, queries_list, 5).collect()
-    }
-    jvm = {
-        (r["query_id"], r["vec_id"]) for r in knn_batch(embeddings_df, queries_df, 5).collect()
-    }
-    assert blas == jvm
 
 
 def test_acorn_plan_equals_loop_all_branches(spark):

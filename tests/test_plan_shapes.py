@@ -296,14 +296,15 @@ def test_prepared_queries_are_not_driver_local(spark):
 
 
 def test_prepared_cache_evicts_dead_sessions(spark):
-    """_PREPARED entries keyed by a dead applicationId must be evicted on
-    the next decorated call (VERDICT r4 'what's wrong' #2b: unbounded
-    growth across session restarts)."""
+    """Prepared plans in the session artifact registry keyed by a dead
+    applicationId must be evicted on the next decorated call (unbounded
+    growth across session restarts otherwise)."""
     import __spark_entry__ as m
+    from acorn_hybrid_vector_search_spark.operators import _cache
 
-    m._PREPARED[("app-dead-123", SF, "_q_pure_topk")] = None
+    _cache._ARTIFACTS[("app-dead-123", "prepared", (SF, "_q_pure_topk"))] = None
     m._q_pure_topk(spark, SF)
-    assert all(k[0] != "app-dead-123" for k in m._PREPARED)
+    assert all(k[0] != "app-dead-123" for k in _cache._ARTIFACTS)
 
 
 def test_lsh_bucket_cap_no_window_on_bare_bucket_key(queries):
