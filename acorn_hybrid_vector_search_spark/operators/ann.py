@@ -366,11 +366,7 @@ def ivf_write(index: IVFIndex, path: str) -> None:
     # read plan over this path must never serve the pre-rewrite
     # snapshot (the r7 rule every other writer already follows)
     from acorn_hybrid_vector_search_spark.operators._cache import invalidate
-    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _bump_store_version,
-    )
 
-    _bump_store_version(path)
     invalidate()
 
 
@@ -509,11 +505,6 @@ def ivf_delete(
         .write.mode("append")
         .parquet(_tombstones_path(path))
     )
-    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _bump_store_version,
-    )
-
-    _bump_store_version(path)
     invalidate()
 
 
@@ -556,11 +547,6 @@ def ivf_reclaim(spark, path: str, *, id_col: str = "vec_id") -> int:
         raise
     _swap_dir(lists, tmp)
     shutil.rmtree(_tombstones_path(path), ignore_errors=True)
-    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _bump_store_version,
-    )
-
-    _bump_store_version(path)
     invalidate()
     return int(n_live)
 

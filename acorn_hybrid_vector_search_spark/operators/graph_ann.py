@@ -59,6 +59,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from acorn_hybrid_vector_search_spark.operators._cache import artifact
+
 __all__ = [
     "NswGraph",
     "nsw_batch_topk",
@@ -743,8 +745,7 @@ def _read_store(spark, path: str):
     (r14, guide §2.4): re-reading a session-static store per call paid a
     footer/schema job every time. Writers keep plain reads and all of
     them call ``_cache.invalidate()`` after mutating a store, which
-    clears this memo too — the same staleness contract the stats memos
-    carry via their fingerprints."""
+    clears this memo too — the same contract as the stats loaders."""
     from acorn_hybrid_vector_search_spark.operators._cache import read_parquet
 
     return read_parquet(spark, path)
@@ -951,7 +952,6 @@ def nsw_delete(
         .write.mode("append")
         .parquet(_tombstones_path(path))
     )
-    _bump_store_version(path)
     invalidate()
 
 
@@ -989,7 +989,6 @@ def nsw_undelete(spark, path: str, ids, *, id_col: str = "vec_id") -> int:
         # nothing left: drop the sidecar entirely so readers (and the
         # prune tombstone guard) see a tombstone-free store
         shutil.rmtree(tpath)
-        _bump_store_version(path)
         invalidate()
         return int(restored)
     tmp = tpath + "__tmp"
@@ -999,7 +998,6 @@ def nsw_undelete(spark, path: str, ids, *, id_col: str = "vec_id") -> int:
         shutil.rmtree(tmp, ignore_errors=True)
         raise
     _swap_dir(tpath, tmp)
-    _bump_store_version(path)
     invalidate()
     return int(restored)
 
@@ -1107,12 +1105,10 @@ def nsw_append(
     if gamma is None:
         gamma = _store_gamma(stored)
     max_part = stored.agg(F.max("part_id")).head()[0]
-    # bump BEFORE the shard write as well as after (review r11): a
-    # crash between a committed data write and a trailing bump would
-    # leave the recorded token equal to the on-disk one, so the O(1)
-    # fast path would read the pre-append stats as provably fresh; the
-    # leading bump makes the crash window conservative (token mismatch
-    # → fingerprint walk → the new shards read as stale)
+    # bump BEFORE the shard write as well as after: a crash between a
+    # committed data write and a trailing bump would otherwise leave the
+    # recorded token equal to the on-disk one, and pre-append sidecars
+    # would read as fresh
     _bump_store_version(path)
     _nsw_nodes(
         df, m=m, ef_construction=ef_construction, gamma=gamma,
@@ -1263,28 +1259,10 @@ def _numeric_stats_path(path: str) -> str:
     return path.rstrip("/") + "/_shard_numeric_stats"
 
 
-def _dir_fingerprint(path: str) -> tuple:
-    """Content fingerprint of a sidecar directory: sorted (name, size,
-    mtime_ns) of its files. Strict-mtime memo keys alone are unsafe on
-    filesystems with coarse timestamp granularity — a rewrite landing
-    in the same tick would serve the stale memoized stats (ADVICE r9);
-    size+name+mtime of every file distinguishes any real parquet
-    rewrite (part file names embed fresh UUIDs)."""
-    import os
-
-    return tuple(
-        sorted(
-            (name, st.st_size, st.st_mtime_ns)
-            for name in os.listdir(path)
-            for st in (os.stat(os.path.join(path, name)),)
-        )
-    )
-
-
 _STORE_FP_FILE = "_store_fp.json"
 _STORE_VERSION_FILE = "_store_version.json"
-# reserved key inside _store_fp.json (shard keys are "part_id=N" dir
-# names, so no collision is possible)
+# the key inside a sidecar's _store_fp.json that holds the store-version
+# token the sidecar was computed against
 _FP_VERSION_KEY = "__store_version__"
 
 
@@ -1310,15 +1288,15 @@ def _read_store_version(path: str) -> "dict | None":
 
 
 def _bump_store_version(path: str) -> "dict | None":
-    """Write a fresh store-version token — called by EVERY store mutator
-    (r11, VERDICT r10 ask #1): the O(1) freshness protocol that replaces
-    ``ann_search``'s per-dispatch per-shard content-fingerprint walk.
-    Monotonic counter + random nonce (the nonce defeats ABA across
-    directory swaps and out-of-band restores of an old counter value).
-    Remote paths are a no-op (their readers already report
-    fresh/uncheckable and their mutators fail fast) — returns the new
-    token, or None when none was written. The leading ``_`` keeps the
-    json invisible to parquet reads of the store root."""
+    """Write a fresh store-version token — called by every writer that
+    changes shard bytes (tombstone writes do not: they leave every
+    sidecar describing the shards it was computed from). Monotonic
+    counter + random nonce (the nonce defeats ABA across directory
+    swaps and out-of-band restores of an old counter value). Remote
+    paths are a no-op (their sidecars are uncheckable and their
+    mutators fail fast) — returns the new token, or None when none was
+    written. The leading ``_`` keeps the json invisible to parquet
+    reads of the store root."""
     import json
     import os
 
@@ -1334,194 +1312,95 @@ def _bump_store_version(path: str) -> "dict | None":
     return tok
 
 
-def _shard_fp_hash(path: str, d: str) -> str:
-    """Stable digest of one shard directory's content fingerprint."""
-    import hashlib
-    import os
-
-    return hashlib.md5(
-        repr(_dir_fingerprint(os.path.join(path, d))).encode()
-    ).hexdigest()
-
-
-def _record_store_fp(
-    path: str, sidecar: str, fps: dict, version: "dict | None" = None
-) -> None:
-    """Persist the per-shard content fingerprints a stats write was
-    computed against, INSIDE the sidecar directory (the leading ``_``
-    keeps the json invisible to parquet reads of the sidecar).
-    ``version`` (r11): the store-version token snapshotted BEFORE the
-    stats aggregation — the O(1) freshness evidence ``_check_stats_fresh``
-    prefers over the per-shard fingerprint walk."""
+def _record_store_version(sidecar: str, version: dict) -> None:
+    """Persist the store-version token a sidecar was computed against
+    INSIDE the sidecar directory (the leading ``_`` keeps the json
+    invisible to parquet reads of the sidecar)."""
     import json
     import os
 
-    rec = dict(fps)
-    if version is not None:
-        rec[_FP_VERSION_KEY] = version
     with open(os.path.join(sidecar, _STORE_FP_FILE), "w") as f:
-        json.dump(rec, f)
+        json.dump({_FP_VERSION_KEY: version}, f)
 
 
-def _snapshot_store_fp(path: str) -> dict:
-    import os
-
-    return {
-        d: _shard_fp_hash(path, d)
-        for d in os.listdir(path)
-        if d.startswith("part_id=")
-    }
-
-
-def _check_stats_fresh(path: str, spath: str) -> list[str]:
-    """Shard directories whose CONTENT no longer matches what the
-    stats sidecar was computed against. Returns the stale shard-dir
-    names (empty = fresh); remote paths are uncheckable and report
-    fresh — their writers already fail fast.
-
-    Preferred evidence (r11, VERDICT r10 ask #1 — the O(1) protocol):
-    the store-version token. Every store mutator bumps
-    ``_store_version.json`` at the store root; ``nsw_stats_write``
-    records the token it computed against into the sidecar. Token
-    match ⇒ provably no in-API mutation since the stats were written —
-    ONE file read, no per-shard walk, flat in shard count. Token
-    mismatch (or either side absent) falls through to the r10 content
-    fingerprints rather than refusing outright: a mutation that never
-    touched shard content (e.g. a tombstone write, which the prune
-    rungs gate separately) must not permanently demote the store.
-
-    Fallback evidence (r10): the per-shard content fingerprints
-    ``nsw_stats_write`` snapshots BEFORE aggregating and records into
-    the sidecar (``_store_fp.json`` — name+size+mtime of every file):
-    a shard rewritten even in the same filesystem-timestamp tick
-    changes its part-file names (fresh UUIDs) and is caught, while a
-    store whose bytes are untouched stays fresh regardless of
-    timestamp granularity — closing BOTH directions of the ADVICE r9
-    coarse-mtime hazard. A shard RECORDED in the snapshot but since
-    deleted from disk also reads as stale (ADVICE r10 — the one-way
-    iteration over current dirs was blind to deletions). Sidecars
-    written before the fingerprint existed fall back to the mtime
-    rule, ``>=`` so a same-tick rewrite reads as stale (ambiguity
-    must refuse: pruning on stale stats silently breaks the exactness
-    contract, while a spurious refresh costs one ``nsw_stats_write``)."""
+def _check_stats_fresh(path: str, sidecar: str) -> bool:
+    """True iff the sidecar still describes the store's shard bytes:
+    the token recorded in the sidecar equals the store's current
+    ``_store_version.json`` token. Every writer that changes shard
+    bytes bumps the token, and ``nsw_stats_write`` / ``nsw_write_int8``
+    record the token they read before scanning, so a mutation racing a
+    sidecar write reads as stale. A token missing on either side reads
+    as stale. Remote paths are uncheckable and read as fresh — their
+    writers fail fast."""
     import json
     import os
 
     if "://" in path:
-        return []
-    fp_file = os.path.join(spath, _STORE_FP_FILE)
-    if os.path.exists(fp_file):
-        with open(fp_file) as f:
-            recorded = json.load(f)
-        rec_version = recorded.pop(_FP_VERSION_KEY, None)
-        if rec_version is not None and rec_version == _read_store_version(path):
-            return []  # O(1) fast path: no mutator ran since the stats
-        current = {
-            d for d in os.listdir(path) if d.startswith("part_id=")
-        }
-        stale = [
-            d for d in current if recorded.get(d) != _shard_fp_hash(path, d)
-        ]
-        stale.extend(sorted(set(recorded) - current))
-        return stale
-    stats_m = os.stat(spath).st_mtime_ns
-    return [
-        d
-        for d in os.listdir(path)
-        if d.startswith("part_id=")
-        and os.stat(os.path.join(path, d)).st_mtime_ns >= stats_m
-    ]
+        return True
+    try:
+        with open(os.path.join(sidecar, _STORE_FP_FILE)) as f:
+            recorded = json.load(f).get(_FP_VERSION_KEY)
+    except (OSError, ValueError):
+        return False
+    return recorded is not None and recorded == _read_store_version(path)
 
 
-# (appId, stats_path, dir content fingerprint) → (parts, cents, radii,
-# counts); the sidecar is S rows of driver-side constants and every pruned
-# query needs it — without the memo each serve call pays one collect job
-# (measured ~0.2-0.3 s on the ladder, comparable to the whole pruned
-# search). Fingerprint-keyed (per-file name+size+mtime, not the bare dir
-# mtime — ADVICE r9: coarse timestamp granularity could let a same-tick
-# rewrite serve stale stats): nsw_stats_write rewrites the sidecar
-# directory, so a refresh changes the key and stale entries die with the
-# app id.
-_STATS_MEMO: dict[tuple, tuple] = {}
+def _require_fresh(path: str, sidecar: str, what: str) -> None:
+    if not _check_stats_fresh(path, sidecar):
+        raise ValueError(
+            f"stale {what} at {path}: the store was rewritten after the "
+            f"sidecar was written (store-version token changed or "
+            f"missing) — run nsw_stats_write"
+        )
+
+
+# The loaders below are session artifacts keyed by sidecar path: the
+# sidecar is S rows of driver-side constants every pruned query needs
+# (without the memo each serve call pays one collect job), and every
+# sidecar writer calls _cache.invalidate().
 
 
 def _load_stats(spark, spath: str):
-    key = None
-    if "://" not in spath:
-        key = (
-            spark.sparkContext.applicationId,
-            spath,
-            _dir_fingerprint(spath),
+    def build(_):
+        srows = spark.read.parquet(spath).collect()
+        return (
+            np.asarray([int(r["part_id"]) for r in srows], dtype=np.int64),
+            np.asarray([list(r["centroid"]) for r in srows], np.float64),
+            np.asarray([float(r["radius"]) for r in srows], np.float64),
+            np.asarray([int(r["n"]) for r in srows], dtype=np.int64),
         )
-        hit = _STATS_MEMO.get(key)
-        if hit is not None:
-            return hit
-    srows = spark.read.parquet(spath).collect()
-    out = (
-        np.asarray([int(r["part_id"]) for r in srows], dtype=np.int64),
-        np.asarray([list(r["centroid"]) for r in srows], np.float64),
-        np.asarray([float(r["radius"]) for r in srows], np.float64),
-        np.asarray([int(r["n"]) for r in srows], dtype=np.int64),
-    )
-    if key is not None:
-        _STATS_MEMO.clear()  # one store's stats at a time is plenty
-        _STATS_MEMO[key] = out
-    return out
 
-
-_ATTR_STATS_MEMO: dict[tuple, dict] = {}
+    return artifact(spark, "shard_stats", spath, build)
 
 
 def _load_attr_stats(spark, apath: str) -> dict:
     """``{attr: {part_id: {value_str: n}}}`` from the attr-counts
-    sidecar, fingerprint-memoized like ``_load_stats`` — every pruned
-    hybrid serve needs the same S×V rows."""
-    key = None
-    if "://" not in apath:
-        key = (
-            spark.sparkContext.applicationId,
-            apath,
-            _dir_fingerprint(apath),
-        )
-        hit = _ATTR_STATS_MEMO.get(key)
-        if hit is not None:
-            return hit
-    out: dict = {}
-    for r in spark.read.parquet(apath).collect():
-        out.setdefault(r["attr"], {}).setdefault(int(r["part_id"]), {})[
-            r["value"]
-        ] = int(r["n"])
-    if key is not None:
-        _ATTR_STATS_MEMO.clear()
-        _ATTR_STATS_MEMO[key] = out
-    return out
+    sidecar."""
 
+    def build(_):
+        out: dict = {}
+        for r in spark.read.parquet(apath).collect():
+            out.setdefault(r["attr"], {}).setdefault(int(r["part_id"]), {})[
+                r["value"]
+            ] = int(r["n"])
+        return out
 
-_NUMERIC_STATS_MEMO: dict[tuple, dict] = {}
+    return artifact(spark, "shard_attr_stats", apath, build)
 
 
 def _load_numeric_stats(spark, npath: str) -> dict:
     """``{attr: {part_id: (vmin, vmax, n_present)}}`` from the numeric
-    zone-map sidecar, fingerprint-memoized like ``_load_stats``."""
-    key = None
-    if "://" not in npath:
-        key = (
-            spark.sparkContext.applicationId,
-            npath,
-            _dir_fingerprint(npath),
-        )
-        hit = _NUMERIC_STATS_MEMO.get(key)
-        if hit is not None:
-            return hit
-    out: dict = {}
-    for r in spark.read.parquet(npath).collect():
-        out.setdefault(r["attr"], {})[int(r["part_id"])] = (
-            r["vmin"], r["vmax"], int(r["n_present"]),
-        )
-    if key is not None:
-        _NUMERIC_STATS_MEMO.clear()
-        _NUMERIC_STATS_MEMO[key] = out
-    return out
+    zone-map sidecar."""
+
+    def build(_):
+        out: dict = {}
+        for r in spark.read.parquet(npath).collect():
+            out.setdefault(r["attr"], {})[int(r["part_id"])] = (
+                r["vmin"], r["vmax"], int(r["n_present"]),
+            )
+        return out
+
+    return artifact(spark, "shard_numeric_stats", npath, build)
 
 
 # the §2.3 range operators the numeric zone maps understand; the
@@ -1735,8 +1614,12 @@ def nsw_stats_write(
     map-side pass (applyInPandas per shard, S-row output). Call after
     ``nsw_write``/``nsw_append``/``nsw_compact`` change the shard set
     (``nsw_write_clustered`` does it for you); ``nsw_read_topk(
-    prune=True)`` refuses stale stats (shard-set mismatch) rather than
-    pruning unsoundly. Returns the number of shards covered.
+    prune=True)`` refuses stale stats rather than pruning unsoundly.
+    Returns the number of shards covered.
+
+    Freshness: each sidecar records the store-version token read BEFORE
+    the scan (a store with no token gets one here), and it is fresh iff
+    that token still equals the store's (``_check_stats_fresh``).
 
     ``attrs`` (r9b): payload columns to also aggregate EXACT per-shard
     value counts for — ``(part_id, attr, value, n)`` in a
@@ -1766,16 +1649,11 @@ def nsw_stats_write(
     lexicographically and silently break the bound)."""
     from acorn_hybrid_vector_search_spark.operators._cache import invalidate
 
-    # snapshot the store-version token and the shard-content
-    # fingerprints BEFORE any aggregation: a mutation landing mid-write
-    # bumps the token (and changes shard content), so the recorded
-    # evidence reads as stale — never as falsely fresh
-    # (_check_stats_fresh). A store with no token yet (pre-r11 layout)
-    # gets one initialized here so its sidecars join the O(1) protocol.
+    # read the token BEFORE any aggregation: a mutation landing mid-write
+    # bumps it, so the recorded token reads as stale, never falsely fresh
     ver = None
     if "://" not in path:
         ver = _read_store_version(path) or _bump_store_version(path)
-    fps = None if "://" in path else _snapshot_store_fp(path)
     stored = spark.read.parquet(path)
     out_schema = "part_id int, centroid array<double>, radius double, n long"
 
@@ -1798,8 +1676,8 @@ def nsw_stats_write(
         .applyInPandas(stats, out_schema)
     )
     sdf.write.mode("overwrite").parquet(_stats_path(path))
-    if fps is not None:
-        _record_store_fp(path, _stats_path(path), fps, ver)
+    if ver is not None:
+        _record_store_version(_stats_path(path), ver)
     if attrs:
         missing = [a for a in attrs if a not in stored.columns]
         if missing:
@@ -1820,8 +1698,8 @@ def nsw_stats_write(
             )
             counts = part if counts is None else counts.unionByName(part)
         counts.write.mode("overwrite").parquet(_attr_stats_path(path))
-        if fps is not None:
-            _record_store_fp(path, _attr_stats_path(path), fps, ver)
+        if ver is not None:
+            _record_store_version(_attr_stats_path(path), ver)
     if numeric_attrs:
         from pyspark.sql.types import NumericType
 
@@ -1848,8 +1726,8 @@ def nsw_stats_write(
             )
             zones = part if zones is None else zones.unionByName(part)
         zones.write.mode("overwrite").parquet(_numeric_stats_path(path))
-        if fps is not None:
-            _record_store_fp(path, _numeric_stats_path(path), fps, ver)
+        if ver is not None:
+            _record_store_version(_numeric_stats_path(path), ver)
     invalidate()
     return spark.read.parquet(_stats_path(path)).count()
 
@@ -2017,9 +1895,9 @@ def pruned_match_attrs(spark, path: str) -> frozenset:
     if "://" not in path:
         if not (os.path.exists(spath) and os.path.exists(apath)):
             return frozenset()
-        if _check_stats_fresh(path, spath):
-            return frozenset()
-        if _check_stats_fresh(path, apath):
+        if not (
+            _check_stats_fresh(path, spath) and _check_stats_fresh(path, apath)
+        ):
             return frozenset()
     return _absent_ok(
         lambda: frozenset(_load_attr_stats(spark, apath)), frozenset()
@@ -2039,9 +1917,9 @@ def pruned_range_attrs(spark, path: str) -> frozenset:
     if "://" not in path:
         if not (os.path.exists(spath) and os.path.exists(npath)):
             return frozenset()
-        if _check_stats_fresh(path, spath):
-            return frozenset()
-        if _check_stats_fresh(path, npath):
+        if not (
+            _check_stats_fresh(path, spath) and _check_stats_fresh(path, npath)
+        ):
             return frozenset()
     return _absent_ok(
         lambda: frozenset(_load_numeric_stats(spark, npath)), frozenset()
@@ -2084,7 +1962,7 @@ def estimate_kept_fraction(
     spath = _stats_path(path)
     if "://" not in path and not os.path.exists(spath):
         return None
-    if _check_stats_fresh(path, spath):
+    if not _check_stats_fresh(path, spath):
         return None
     loaded = _absent_ok(lambda: _load_stats(spark, spath), None)
     if loaded is None:
@@ -2497,17 +2375,10 @@ def nsw_read_topk(
                 f"{len(store_parts)} — run nsw_stats_write after "
                 f"append/compact changed the shard set"
             )
-        # CONTENT staleness, not just the shard-id set (review r9): a
-        # same-set rewrite (streaming replay, dynamic-mode rebuild)
-        # leaves the ids identical while the balls moved — any shard
-        # directory rewritten at-or-after the sidecar means the stats
-        # no longer describe it (>=: same-tick is ambiguous ⇒ stale)
-        if newer := _check_stats_fresh(path, spath):
-            raise ValueError(
-                f"stale _shard_stats at {path}: shard dir(s) "
-                f"{sorted(newer)[:3]}… were rewritten at or after the "
-                f"stats — run nsw_stats_write"
-            )
+        # a same-set rewrite (streaming replay, dynamic-mode rebuild)
+        # leaves the ids identical while the balls moved: the version
+        # token catches it
+        _require_fresh(path, spath, "_shard_stats")
         possible = None
         per_query_counts: "list[np.ndarray] | None" = None
         per_query_possible: "list[np.ndarray | None] | None" = None
@@ -2523,12 +2394,7 @@ def nsw_read_topk(
                     f"prune_match but no _shard_attr_stats sidecar at "
                     f"{path} — run nsw_stats_write(attrs={need!r})"
                 )
-            if newer := _check_stats_fresh(path, apath):
-                raise ValueError(
-                    f"stale _shard_attr_stats at {path}: shard "
-                    f"dir(s) {sorted(newer)[:3]}… were rewritten at "
-                    f"or after the counts — run nsw_stats_write"
-                )
+            _require_fresh(path, apath, "_shard_attr_stats")
             attr_counts = _load_attr_stats(spark, apath)
             if missing := [a for a in need if a not in attr_counts]:
                 raise ValueError(
@@ -2587,12 +2453,7 @@ def nsw_read_topk(
                     f"at {path} — run nsw_stats_write("
                     f"numeric_attrs=[{r_attr!r}])"
                 )
-            if newer := _check_stats_fresh(path, npath):
-                raise ValueError(
-                    f"stale _shard_numeric_stats at {path}: shard "
-                    f"dir(s) {sorted(newer)[:3]}… were rewritten at "
-                    f"or after the zone maps — run nsw_stats_write"
-                )
+            _require_fresh(path, npath, "_shard_numeric_stats")
             num_stats = _load_numeric_stats(spark, npath)
             if r_attr not in num_stats:
                 raise ValueError(
@@ -2670,12 +2531,7 @@ def nsw_read_topk(
                         f"_shard_attr_stats sidecar at {path} — run "
                         f"nsw_stats_write(attrs={need_exact!r})"
                     )
-                if newer := _check_stats_fresh(path, apath):
-                    raise ValueError(
-                        f"stale _shard_attr_stats at {path}: shard "
-                        f"dir(s) {sorted(newer)[:3]}… were rewritten at "
-                        f"or after the counts — run nsw_stats_write"
-                    )
+                _require_fresh(path, apath, "_shard_attr_stats")
                 attr_counts = _load_attr_stats(spark, apath)
                 if missing := [
                     a for a in need_exact if a not in attr_counts
@@ -2694,12 +2550,7 @@ def nsw_read_topk(
                         f"_shard_numeric_stats sidecar at {path} — run "
                         f"nsw_stats_write(numeric_attrs={need_range!r})"
                     )
-                if newer := _check_stats_fresh(path, npath):
-                    raise ValueError(
-                        f"stale _shard_numeric_stats at {path}: shard "
-                        f"dir(s) {sorted(newer)[:3]}… were rewritten at "
-                        f"or after the zone maps — run nsw_stats_write"
-                    )
+                _require_fresh(path, npath, "_shard_numeric_stats")
                 num_stats = _load_numeric_stats(spark, npath)
                 if missing := [a for a in need_range if a not in num_stats]:
                     raise ValueError(
@@ -3215,15 +3066,16 @@ def nsw_write_int8(spark, path: str, *, id_col: str = "vec_id") -> None:
 
     Payload columns ride along so §2.3 predicate masks evaluate on the
     sidecar scan itself (same Catalyst machinery as ``nsw_dense_topk``).
-    Freshness: the sidecar records the store-version token + per-shard
-    content fingerprints (the ``_record_store_fp`` protocol); the
+    Freshness: the sidecar records the store-version token read BEFORE
+    the scan (a store with no token gets one here), and it is fresh iff
+    that token still equals the store's (``_check_stats_fresh``); the
     kernel REFUSES on staleness — codes quantized against a mutated
     store would silently break the exactness bound. Local stores only
-    (the fingerprint walk is os-level, like every stats sidecar)."""
+    (the token is an os-level file, like every stats sidecar's)."""
     if "://" in path:
         raise ValueError(
             "nsw_write_int8 requires a local store path (the freshness "
-            f"fingerprint walk is os-level); got {path!r}"
+            f"token is an os-level file); got {path!r}"
         )
     from pyspark.sql import types as sqlt
 
@@ -3267,10 +3119,9 @@ def nsw_write_int8(spark, path: str, *, id_col: str = "vec_id") -> None:
             yield out
 
     sidecar = _int8_path(path)
-    # snapshot BEFORE the scan (the stats-writer discipline): a mutation
-    # racing the encode reads as stale, never as silently fresh
-    version = _read_store_version(path)
-    fps = _snapshot_store_fp(path)
+    # read the token BEFORE the scan (the stats-writer discipline): a
+    # mutation racing the encode reads as stale, never as silently fresh
+    version = _read_store_version(path) or _bump_store_version(path)
     cols = [id_col, "part_id", "vector"] + payload
     (
         stored.select(*cols)
@@ -3278,7 +3129,7 @@ def nsw_write_int8(spark, path: str, *, id_col: str = "vec_id") -> None:
         .write.mode("overwrite")
         .parquet(sidecar)
     )
-    _record_store_fp(path, sidecar, fps, version)
+    _record_store_version(sidecar, version)
     # sidecar writers follow the store-writer contract: session-memoized
     # reads (_read_store/read_parquet) would otherwise keep serving a
     # DataFrame whose file listing points at the pre-overwrite files
@@ -3289,8 +3140,8 @@ def nsw_write_int8(spark, path: str, *, id_col: str = "vec_id") -> None:
 
 def nsw_int8_fresh(spark, path: str) -> bool:
     """True iff an int8 code sidecar exists under ``path`` AND is fresh
-    against the store (the ``nsw_write_int8`` version-token/fingerprint
-    protocol — O(1) when the version token matches). This is the probe
+    against the store (its recorded version token equals the store's —
+    ``_check_stats_fresh``). This is the probe
     behind ``ann_search_batch``'s ``dense_dtype="auto"`` (r14, VERDICT
     r13 ask #1): building the sidecar is the caller's opt-in signal for
     the bandwidth-bound rung, and a STALE sidecar resolves to the
@@ -3302,7 +3153,7 @@ def nsw_int8_fresh(spark, path: str) -> bool:
     sidecar = _int8_path(path)
     if "://" in sidecar or not os.path.isdir(sidecar):
         return False
-    return not _check_stats_fresh(path, sidecar)
+    return _check_stats_fresh(path, sidecar)
 
 
 def nsw_dense_topk_int8(
@@ -3372,7 +3223,7 @@ def nsw_dense_topk_int8(
     recall lever.
 
     Refuses on a stale sidecar (store mutated since ``nsw_write_int8``
-    — the version-token/fingerprint protocol); tombstones alone do not
+    — the version-token rule); tombstones alone do not
     stale the codes (they exclude rows in phase 1, like the dense
     kernel).
 
@@ -3415,11 +3266,11 @@ def nsw_dense_topk_int8(
             f"no int8 code sidecar under {path!r} — run nsw_write_int8 "
             "first (the two-phase kernel scans codes, not vectors)"
         )
-    if stale := _check_stats_fresh(path, sidecar):
+    if not _check_stats_fresh(path, sidecar):
         raise ValueError(
-            f"int8 code sidecar is stale against shards {stale} — the "
-            "store was mutated since nsw_write_int8; rebuild the codes "
-            "(searching stale codes would break the exactness bound)"
+            f"int8 code sidecar under {path!r} is stale — the store was "
+            "mutated since nsw_write_int8; rebuild the codes (searching "
+            "stale codes would break the exactness bound)"
         )
 
     codes = _read_store(spark, sidecar)

@@ -14,16 +14,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from acorn_hybrid_vector_search_spark.operators._cache import artifact
+
 # P1: the five attributes every query consults (/root/reference/parse-json.py:68-81)
 QUERY_ATTRS = ("brand", "color", "item_weight", "model_year", "country")
-
-
-# inferred-schema memo per (session, path): inference is its own full
-# scan of the JSONL, and re-running the ETL in one session (bench
-# loops, notebooks) re-paid it every call (r14, guide §6 — explicit
-# schema skips the inference double-scan; the first call per session
-# still derives it honestly from the data)
-_JSON_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
 
 
 def read_listings(spark: SparkSession, path: str) -> DataFrame:
@@ -36,16 +30,15 @@ def read_listings(spark: SparkSession, path: str) -> DataFrame:
     inferred schema is memoized per (session, path) so only the first
     read per session pays the inference scan.
     """
-    key = (spark.sparkContext.applicationId, path)
-    for stale in [k for k in _JSON_SCHEMA_CACHE if k[0] != key[0]]:
-        del _JSON_SCHEMA_CACHE[stale]
-    schema = _JSON_SCHEMA_CACHE.get(key)
-    if schema is None:
-        # infer once, but RETURN the explicit-schema reader in every
-        # call (first included) so repeat plans canonicalize equal —
-        # downstream semantic-dedup pins (build_items' pin_correlated)
-        # would otherwise miss between the first and later calls
-        schema = _JSON_SCHEMA_CACHE[key] = spark.read.json(path).schema
+    # inference is its own full scan of the JSONL, so the inferred
+    # schema is a session artifact; infer once, but RETURN the
+    # explicit-schema reader in every call (first included) so repeat
+    # plans canonicalize equal — downstream semantic-dedup pins
+    # (build_items' pin_correlated) would otherwise miss between the
+    # first and later calls
+    schema = artifact(
+        spark, "json_schema", path, lambda _: spark.read.json(path).schema
+    )
     return spark.read.schema(schema).json(path)
 
 

@@ -9,25 +9,21 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from acorn_hybrid_vector_search_spark.operators._cache import artifact
 from acorn_hybrid_vector_search_spark.schemas import TESTDATA_TABLES
 from acorn_hybrid_vector_search_spark.sources.testdata import load_table
 
 
-_REGISTERED: dict[tuple[str, str, str], list[str]] = {}
-
-
 def register_views(spark: SparkSession, sf_dir: str, *, prefix: str = "") -> list[str]:
-    """One temp view per testdata table (idempotent; memoized per session —
+    """One temp view per testdata table (idempotent; a session artifact —
     re-registration re-reads every table's footer for nothing)."""
-    key = (spark.sparkContext.applicationId, sf_dir, prefix)
-    if key in _REGISTERED:
-        return _REGISTERED[key]
-    names = []
-    for t in TESTDATA_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(prefix + t)
-        names.append(prefix + t)
-    _REGISTERED[key] = names
-    return names
+
+    def build(_):
+        for t in TESTDATA_TABLES:
+            load_table(spark, sf_dir, t).createOrReplaceTempView(prefix + t)
+        return [prefix + t for t in TESTDATA_TABLES]
+
+    return artifact(spark, "views", (sf_dir, prefix), build)
 
 
 # Shared-dialect battery: each string is valid for BOTH Spark SQL and

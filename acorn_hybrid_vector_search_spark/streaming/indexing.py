@@ -177,13 +177,10 @@ def nsw_stream_batch_writer(
                 f"batch_id {batch_id} overflows the int32 part_id range at "
                 f"parts_cap {parts_cap}; compact and restart the checkpoint"
             )
-        # bump the store-version token BEFORE any mutation (review r11):
-        # this writer's dynamic overwrite can REWRITE an existing shard
-        # set in place, and a crash between the parquet commit and a
-        # trailing bump would leave recorded == on-disk token — the
-        # O(1) fast path would then skip the fingerprint walk that
-        # catches exactly this same-set rewrite. Leading bump ⇒ the
-        # crash window reads as token-mismatch ⇒ fallback walk governs.
+        # bump the store-version token BEFORE any mutation: this writer's
+        # dynamic overwrite can rewrite an existing shard set in place,
+        # and a crash between the parquet commit and the trailing bump
+        # must not leave sidecars recorded against the old bytes fresh
         from acorn_hybrid_vector_search_spark.operators.graph_ann import (
             _bump_store_version,
         )
@@ -274,9 +271,7 @@ def nsw_stream_batch_writer(
         )
         # the batch write mutated the store: a pinned pre-write snapshot
         # must not be served to the next reader, and the store-version
-        # token must advance (the r11 O(1) freshness protocol — stats
-        # sidecars recorded before this batch now read as stale via one
-        # token compare instead of a per-shard fingerprint walk)
+        # token must advance so sidecars recorded before it read as stale
         _bump_store_version(path)
         invalidate()
 

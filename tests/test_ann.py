@@ -1041,8 +1041,7 @@ def test_ann_search_dispatches_prune_match_rung(spark, tmp_path):
     assert key(got) == key(direct)
     assert [r["vec_id"] for r in got] == [i for _, i in brute]
     # stale attr sidecar → coverage reads empty → exact prefilter
-    # fallback, same answer, no guard exception (r10: staleness is a
-    # CONTENT change — a bare mtime touch correctly stays fresh)
+    # fallback, same answer, no guard exception
     part = next(d for d in os.listdir(store) if d.startswith("part_id="))
     _time.sleep(0.01)
     with open(os.path.join(store, part, "_rewrite_marker"), "w") as f:
@@ -1052,8 +1051,8 @@ def test_ann_search_dispatches_prune_match_rung(spark, tmp_path):
         pruned_match_attrs,
     )
 
-    # a writer's rewrite bumps the token (r11 — every in-API mutator
-    # does); the fallback fingerprint walk then catches the content
+    # a writer's rewrite bumps the token (every in-API shard writer
+    # does), which stales every sidecar
     _bump_store_version(store)
 
     assert pruned_match_attrs(spark, store) == frozenset()  # now stale
@@ -1581,6 +1580,240 @@ def test_ann_search_rule5_demotes_on_stale_stats(spark, tmp_path):
         )[:5]
     ]
     assert [r["vec_id"] for r in got] == brute
+
+
+# ---------------------------------------------------------------------------
+# store freshness is the version token alone: a stats or int8 sidecar is
+# fresh iff the _store_version.json token it recorded equals the store's.
+# Writers that change shard bytes bump the token; tombstone writes do not.
+
+
+def _int8_blob_store(spark, tmp_path):
+    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
+        nsw_write_int8,
+    )
+
+    df, rows, store = _conj_blob_store(spark, tmp_path)
+    nsw_write_int8(spark, store)
+    return df, rows, store
+
+
+def _token_bytes(path):
+    import os
+
+    vf = os.path.join(path, "_store_version.json")
+    if not os.path.exists(vf):
+        return None
+    with open(vf, "rb") as f:
+        return f.read()
+
+
+def test_tombstone_writes_leave_store_version_untouched(spark, tmp_path):
+    """nsw_delete, both nsw_undelete branches (sidecar swap, sidecar
+    drop) and ivf_delete never touch shard bytes, so they never bump."""
+    from acorn_hybrid_vector_search_spark.operators.ann import (
+        ivf_delete,
+        ivf_write,
+    )
+    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
+        nsw_delete,
+        nsw_undelete,
+    )
+
+    df, _, store = _conj_blob_store(spark, tmp_path)
+    before = _token_bytes(store)
+    assert before is not None
+    nsw_delete(spark, store, [0, 1])
+    assert _token_bytes(store) == before
+    assert nsw_undelete(spark, store, [0]) == 1  # one tombstone left: swap
+    assert _token_bytes(store) == before
+    assert nsw_undelete(spark, store, [1]) == 1  # none left: sidecar dropped
+    assert _token_bytes(store) == before
+
+    ivf = str(tmp_path / "ivf")
+    ivf_write(ivf_build(df, n_clusters=4), ivf)
+    before = _token_bytes(ivf)
+    ivf_delete(spark, ivf, [0, 1])
+    assert _token_bytes(ivf) == before
+
+
+def test_bare_bump_stales_every_sidecar(spark, tmp_path):
+    """A token bump with no content change reads stale: the token is
+    the only evidence, and a bump says the shard bytes may have moved."""
+    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
+        _bump_store_version,
+        nsw_int8_fresh,
+        pruned_match_attrs,
+        pruned_range_attrs,
+    )
+
+    _, _, store = _int8_blob_store(spark, tmp_path)
+    assert pruned_match_attrs(spark, store) == frozenset({"label"})
+    assert nsw_int8_fresh(spark, store)
+    _bump_store_version(store)
+    assert pruned_match_attrs(spark, store) == frozenset()
+    assert pruned_range_attrs(spark, store) == frozenset()
+    assert not nsw_int8_fresh(spark, store)
+
+
+def test_missing_store_token_reads_stale(spark, tmp_path):
+    import os
+
+    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
+        nsw_int8_fresh,
+        pruned_match_attrs,
+    )
+
+    _, _, store = _int8_blob_store(spark, tmp_path)
+    assert pruned_match_attrs(spark, store) == frozenset({"label"})
+    os.remove(os.path.join(store, "_store_version.json"))
+    assert pruned_match_attrs(spark, store) == frozenset()
+    assert not nsw_int8_fresh(spark, store)
+
+
+def test_int8_sidecar_on_store_without_token_is_fresh(spark, tmp_path):
+    """nsw_write_int8 initialises a missing token (as nsw_stats_write
+    does) instead of recording None, which would read stale forever."""
+    import os
+
+    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
+        _read_store_version,
+        nsw_int8_fresh,
+        nsw_write_int8,
+    )
+
+    _, _, store = _conj_blob_store(spark, tmp_path)
+    os.remove(os.path.join(store, "_store_version.json"))
+    nsw_write_int8(spark, store)
+    assert _read_store_version(store) is not None
+    assert nsw_int8_fresh(spark, store)
+
+
+# (pruned_match_attrs, pruned_range_attrs, estimate_kept_fraction is None,
+# nsw_int8_fresh) after each step. Tombstone-only steps keep the verdicts
+# of the step before them, so the table equals the one the per-shard
+# fingerprint protocol produced for this sequence.
+LIFECYCLE = [
+    ("build", ["label"], ["weight"], False, True),
+    ("append", [], [], True, False),
+    ("delete", [], [], True, False),
+    ("undelete", [], [], True, False),
+    ("upsert", [], [], True, False),
+    ("stats_write", ["label"], ["weight"], False, False),
+    ("write_int8", ["label"], ["weight"], False, True),
+    ("delete_after_refresh", ["label"], ["weight"], False, True),
+    ("compact", [], [], True, False),
+    ("stats_write_after_compact", ["label"], ["weight"], False, False),
+]
+
+
+def test_lifecycle_verdicts_and_routed_exactness(spark, tmp_path):
+    """Router-facing freshness verdicts after every step of an
+    append/delete/undelete/upsert/refresh/compact sequence, and routed
+    ann_search top-k equal to brute force over the live rows."""
+    import random as _random
+
+    from acorn_hybrid_vector_search_spark.functions.predicates import (
+        flat_accessors,
+    )
+    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
+        estimate_kept_fraction,
+        nsw_append,
+        nsw_compact,
+        nsw_delete,
+        nsw_int8_fresh,
+        nsw_stats_write,
+        nsw_undelete,
+        nsw_upsert,
+        nsw_write_int8,
+        pruned_match_attrs,
+        pruned_range_attrs,
+    )
+
+    df, rows, store = _int8_blob_store(spark, tmp_path)
+    schema = df.schema
+    live = {r[0]: r for r in rows}
+    router = _flat_router()
+    acc = flat_accessors(
+        {"label": "int", "weight": "double", "vec_id": "bigint"}
+    )
+    q = rows[1][1]
+    checks = [
+        (None, lambda r: True),
+        ({"label": ["exact", 3]}, lambda r: r[2] == 3),
+        ({"weight": ["<", 12]}, lambda r: r[3] < 12),
+    ]
+    rng = _random.Random(6)
+
+    def blob_rows(ids, b):
+        cx, cy = (-6 if b < 2 else 6), (-6 if b % 2 == 0 else 6)
+        return [
+            (
+                i,
+                [round(rng.gauss(cx, 0.5), 4), round(rng.gauss(cy, 0.5), 4)]
+                + [round(rng.gauss(0, 0.5), 4) for _ in range(6)],
+                b,
+                float(b * 10 + i % 5),
+            )
+            for i in ids
+        ]
+
+    appended = blob_rows(range(1000, 1020), 1)
+    upserted = blob_rows([10, 11, 1001, 2000], 3)
+    payload = ["label", "weight"]
+    steps = {
+        "build": lambda: None,
+        "append": lambda: nsw_append(
+            spark.createDataFrame(appended, schema), store,
+            payload_cols=payload,
+        ),
+        "delete": lambda: nsw_delete(spark, store, [3, 7, 1005]),
+        "undelete": lambda: nsw_undelete(spark, store, [3]),
+        "upsert": lambda: nsw_upsert(
+            spark.createDataFrame(upserted, schema), store,
+            payload_cols=payload,
+        ),
+        "stats_write": lambda: nsw_stats_write(
+            spark, store, attrs=["label"], numeric_attrs=["weight"]
+        ),
+        "write_int8": lambda: nsw_write_int8(spark, store),
+        "delete_after_refresh": lambda: nsw_delete(spark, store, [20, 21]),
+        "compact": lambda: nsw_compact(spark, store, n_shards=4),
+        "stats_write_after_compact": lambda: nsw_stats_write(
+            spark, store, attrs=["label"], numeric_attrs=["weight"]
+        ),
+    }
+    live_after = {
+        "append": lambda: live.update({r[0]: r for r in appended}),
+        "delete": lambda: [live.pop(i) for i in (3, 7, 1005)],
+        "undelete": lambda: live.update({3: rows[3]}),
+        "upsert": lambda: live.update({r[0]: r for r in upserted}),
+        "delete_after_refresh": lambda: [live.pop(i) for i in (20, 21)],
+    }
+    for name, *want in LIFECYCLE:
+        steps[name]()
+        live_after.get(name, lambda: None)()
+        got = [
+            sorted(pruned_match_attrs(spark, store)),
+            sorted(pruned_range_attrs(spark, store)),
+            estimate_kept_fraction(spark, store, q, 5) is None,
+            nsw_int8_fresh(spark, store),
+        ]
+        assert got == want, name
+        live_df = spark.createDataFrame(sorted(live.values()), schema)
+        for pred, ok in checks:
+            brute = [
+                i
+                for _, i in sorted(
+                    (sum((a - b) ** 2 for a, b in zip(r[1], q)), r[0])
+                    for r in live.values()
+                    if ok(r)
+                )[:5]
+            ]
+            routed = router.ann_search(
+                live_df, q, pred, 5, pruned_path=store, accessors=acc
+            ).collect()
+            assert [r["vec_id"] for r in routed] == brute, (name, pred)
 
 
 def test_ivf_search_exact_batch_equals_per_query_loop(spark):

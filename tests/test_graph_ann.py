@@ -1212,6 +1212,7 @@ def test_prune_refuses_content_stale_stats(spark, blob_corpus, tmp_path):
 
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
         nsw_read_topk,
+        nsw_stats_write,
         nsw_write_clustered,
     )
 
@@ -1227,9 +1228,9 @@ def test_prune_refuses_content_stale_stats(spark, blob_corpus, tmp_path):
     _mutate_shard_dir(path, part)  # simulate a same-set rewrite
     with pytest.raises(ValueError, match="rewritten"):
         nsw_read_topk(spark, path, q, K, prune=True)
-    # r10: a bare TOUCH (mtime moves, content identical) stays FRESH —
-    # the fingerprint evidence reads bytes, not timestamps
-    os.remove(os.path.join(path, part, "_rewrite_marker"))
+    # a bare TOUCH of a fresh store (mtime moves, no writer ran) stays
+    # FRESH — the evidence is the version token, not timestamps
+    nsw_stats_write(spark, path)
     os.utime(os.path.join(path, part))
     nsw_read_topk(spark, path, q, K, ef=10**6, prune=True).count()
 
@@ -1374,20 +1375,16 @@ def test_rebuild_sidecar_clear_rejects_remote_paths(spark):
 
 
 def test_prune_staleness_same_tick_reads_as_stale(spark, tmp_path):
-    """ADVICE r9, upgraded r10: a shard REWRITTEN in the same
-    filesystem-timestamp tick as the stats must read as stale. The
-    evidence is the per-shard CONTENT fingerprint nsw_stats_write
-    records into the sidecar — so the guard catches a same-tick
-    rewrite even when every mtime is forced EQUAL (where any
-    mtime-comparison rule is blind); stores written before the
-    fingerprint existed fall back to the >= mtime rule (ambiguity
-    reads as stale)."""
+    """ADVICE r9: a shard REWRITTEN in the same filesystem-timestamp
+    tick as the stats must read as stale. The evidence is the
+    store-version token every writer bumps, so the guard catches a
+    same-tick rewrite even when every mtime is forced EQUAL (where any
+    mtime-comparison rule is blind)."""
     import os
 
     import pytest
 
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _STORE_FP_FILE,
         _stats_path,
         nsw_read_topk,
         nsw_write_clustered,
@@ -1405,18 +1402,6 @@ def test_prune_staleness_same_tick_reads_as_stale(spark, tmp_path):
     stats_m = os.stat(_stats_path(path)).st_mtime_ns
     shard = next(d for d in os.listdir(path) if d.startswith("part_id="))
     _mutate_shard_dir(path, shard)
-    os.utime(os.path.join(path, shard), ns=(stats_m, stats_m))
-    with pytest.raises(ValueError, match="stale _shard_stats"):
-        nsw_read_topk(spark, path, [(0, [0.0, 2.0])], 3, ef=10**6, prune=True)
-    # legacy stores (no fingerprint file): the >= mtime fallback still
-    # reads a same-tick shard as stale
-    os.remove(os.path.join(path, shard, "_rewrite_marker"))
-    os.remove(os.path.join(_stats_path(path), _STORE_FP_FILE))
-    # removing the fp file bumped the sidecar dir mtime — pin it back
-    # so the fallback compares against the original stats tick
-    os.utime(_stats_path(path), ns=(stats_m, stats_m))
-    os.utime(os.path.join(path, shard), ns=(stats_m - 10, stats_m - 10))
-    nsw_read_topk(spark, path, [(0, [0.0, 2.0])], 3, ef=10**6, prune=True)
     os.utime(os.path.join(path, shard), ns=(stats_m, stats_m))
     with pytest.raises(ValueError, match="stale _shard_stats"):
         nsw_read_topk(spark, path, [(0, [0.0, 2.0])], 3, ef=10**6, prune=True)
@@ -1777,14 +1762,12 @@ def test_range_decisions_relational_twin_matches_verdict_helper(spark):
 
 
 def _mutate_shard_dir(path, part):
-    """Simulate a WRITER's shard rewrite for staleness tests: change the
-    shard directory's CONTENT fingerprint (the r10 fallback evidence —
-    a real rewrite lands fresh part-file names; a bare mtime touch is
-    correctly fresh now) with a spark-invisible "_"-prefixed file, and
-    bump the store-version token exactly like every in-API mutator does
-    (r11: the token is the O(1) fast path; a matching token short-
-    circuits the fingerprint walk by design — see
-    test_store_version_token_protocol for the fast-path pins)."""
+    """Simulate a WRITER's shard rewrite for staleness tests: add a
+    spark-invisible "_"-prefixed file to the shard directory and bump
+    the store-version token exactly like every in-API writer that
+    changes shard bytes does. The bump alone is what stales the
+    sidecars; a content change without a bump is out of contract (see
+    test_store_version_token_protocol's fast-path pin)."""
     import os
 
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
@@ -1867,21 +1850,15 @@ def test_router_sidecar_helpers_remote_missing_read_as_uncovered(spark):
 
 
 def test_store_version_token_protocol(spark, tmp_path):
-    """The token fast path and its two fallback directions:
+    """A sidecar is fresh iff its recorded token equals the store's:
 
-    - every in-API mutator bumps ``_store_version.json``; nsw_stats_write
-      records the token it computed against, so the serving-path
-      freshness check is ONE file compare (no per-shard walk);
-    - token MATCH short-circuits the fingerprint walk by design (the
-      accepted trade: out-of-API writes are out-of-contract — pinned so
-      the behavior is a documented decision, not an accident);
-    - token MISMATCH falls back to the r10 content fingerprints rather
-      than refusing outright: a mutation that changed shard content
-      refuses (stale-token-refuses), while a mutation that did NOT
-      touch shard content (tombstone write) keeps the stats fresh —
-      delete/undelete must not permanently demote prunability;
-    - a store with no token at all (legacy layout) uses the fingerprint
-      walk exactly as in r10 (legacy-fallback pin)."""
+    - nsw_stats_write records the token it computed against, so the
+      serving-path freshness check is ONE file compare;
+    - token MATCH is fresh even after an out-of-API content change
+      (the accepted trade: out-of-API writes are out of contract —
+      pinned so the behavior is a documented decision, not an accident);
+    - token MISMATCH is stale, whether or not the content changed;
+    - a store with no token at all is stale."""
     import json
     import os
 
@@ -1892,8 +1869,6 @@ def test_store_version_token_protocol(spark, tmp_path):
         _check_stats_fresh,
         _read_store_version,
         _stats_path,
-        nsw_delete,
-        nsw_undelete,
         nsw_write_clustered,
     )
 
@@ -1908,46 +1883,34 @@ def test_store_version_token_protocol(spark, tmp_path):
     assert tok is not None and tok["v"] >= 1
     with open(os.path.join(spath, _STORE_FP_FILE)) as f:
         recorded = json.load(f)
-    assert recorded["__store_version__"] == tok
-    assert _check_stats_fresh(path, spath) == []
+    assert recorded == {"__store_version__": tok}
+    assert _check_stats_fresh(path, spath) is True
 
     # fast path pin: an out-of-API content change WITHOUT a bump is
-    # invisible to the token compare (the walk would have caught it)
+    # invisible to the token compare
     shard = next(d for d in os.listdir(path) if d.startswith("part_id="))
     with open(os.path.join(path, shard, "_oob_marker"), "w") as f:
         f.write("x")
-    assert _check_stats_fresh(path, spath) == []
+    assert _check_stats_fresh(path, spath) is True
 
-    # stale-token-refuses: a bump (what every writer does) drops to the
-    # fingerprint walk, which catches the content change
+    # stale-token-refuses: a bump (what every shard writer does)
     _bump_store_version(path)
-    assert _check_stats_fresh(path, spath) == [shard]
+    assert _check_stats_fresh(path, spath) is False
 
-    # token mismatch with UNCHANGED content stays fresh: tombstone
-    # writers bump but never touch shard bytes, and prunability must
-    # come back after undelete without a stats rewrite
+    # token mismatch with UNCHANGED content is stale too
     os.remove(os.path.join(path, shard, "_oob_marker"))
-    assert _check_stats_fresh(path, spath) == []
-    v_before = _read_store_version(path)["v"]
-    nsw_delete(spark, path, [0])
-    assert _read_store_version(path)["v"] > v_before
-    nsw_undelete(spark, path, [0])
-    assert _read_store_version(path)["v"] > v_before + 1
-    assert _check_stats_fresh(path, spath) == []
+    assert _check_stats_fresh(path, spath) is False
 
-    # legacy-fallback pin: no token file at all → the r10 fingerprint
-    # walk governs alone (fresh content passes, a marker refuses)
+    # no token file at all → stale, whatever the content
     os.remove(os.path.join(path, _STORE_VERSION_FILE))
     assert _read_store_version(path) is None
-    assert _check_stats_fresh(path, spath) == []
-    with open(os.path.join(path, shard, "_oob_marker"), "w") as f:
-        f.write("x")
-    assert _check_stats_fresh(path, spath) == [shard]
+    assert _check_stats_fresh(path, spath) is False
 
 
 def test_stats_fresh_detects_deleted_shard(spark, tmp_path):
-    """ADVICE r10: a shard RECORDED in the fingerprint snapshot but
-    since deleted from disk must read as stale — the old one-way
+    """ADVICE r10: a shard the stats describe but since deleted from
+    disk (with the token bump every shard-deleting writer does) must
+    read as stale — the old one-way
     iteration over current dirs reported coverage for a shard set the
     stats no longer describe, and the router then dispatched into
     nsw_read_topk's shard-set guard."""
@@ -1975,7 +1938,7 @@ def test_stats_fresh_detects_deleted_shard(spark, tmp_path):
     )[0]
     shutil.rmtree(os.path.join(path, shard))
     _bump_store_version(path)  # what any real shard-deleting writer does
-    assert shard in _check_stats_fresh(path, _stats_path(path))
+    assert not _check_stats_fresh(path, _stats_path(path))
     # and the router-facing coverage helper reports uncovered, so rule 6
     # falls back instead of routing into the shard-set guard
     assert pruned_match_attrs(spark, path) == frozenset()
